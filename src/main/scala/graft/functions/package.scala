@@ -113,6 +113,21 @@ package object functions {
     ColumnBridge.column(DeletionVariantHashes(ColumnBridge.expression(c), k))
   }
 
+  /** Per-subspace PQ code ids of an `array<double>` vector column under
+    * frozen codebooks — argmin squared L2 per subspace, ties to the lower
+    * code id, as one native codegen kernel (see [[PqCodes]]);
+    * `array<bigint>` of length m, identical to the codeword cross join +
+    * `min(struct(d2, c))` aggregate it replaces. Out-of-range reads
+    * follow element_at under the active session's ANSI mode.
+    */
+  def pq_codes(emb: Column, model: graft.operators.Ann.PqModel): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val ansi = org.apache.spark.sql.SparkSession.active.conf
+      .get("spark.sql.ansi.enabled").toBoolean
+    ColumnBridge.column(PqCodes(ColumnBridge.expression(emb),
+      PqCodebooks(model.subDim, model.codebooks), ansi))
+  }
+
   /** P7: equalName(c1, c2) (/root/reference/soulutionOne.py:13-18) — the
     * lexicographic min of two strings as the cluster representative. A
     * Python UDF in the reference; Spark's built-in codegen'd `least` here.

@@ -712,8 +712,9 @@ object Ann {
     * decides the argmax). Output: (vec_id, emb_d) raw; (vec_id, cell,
     * emb_d) residual — emb_d IS the residual downstream.
     */
-  private def pqCorpus(emb: DataFrame, idCol: String, embCol: String,
-                       coarse: Option[IvfModel]): DataFrame = coarse match {
+  private[graft] def pqCorpus(emb: DataFrame, idCol: String,
+                              embCol: String,
+                              coarse: Option[IvfModel]): DataFrame = coarse match {
     case None =>
       emb.withColumn("emb_d", toDouble(col(embCol)))
         .select(col(idCol).as("vec_id"), col("emb_d"))
@@ -732,8 +733,7 @@ object Ann {
   }
 
   /** The (j, c, w) codeword meta table — m·ks driver rows, the
-    * broadcast side of both the code-assignment join and the ADC LUT
-    * build.
+    * broadcast side of the ADC LUT build.
     */
   private def codeMeta(spark: org.apache.spark.sql.SparkSession,
                        model: PqModel): DataFrame = {
@@ -744,63 +744,64 @@ object Ann {
     spark.createDataFrame(rows).toDF("j", "c", "w")
   }
 
-  /** Long-form PQ codes — (vec_id[, cell], j, c), one row per (vector,
-    * subspace): argmin squared L2 over the codebook, ties to the lower
-    * code id. Shaped as corpus × broadcast codeword meta join +
-    * map-side-combinable `min(struct(d2, c))` aggregate rather than a
-    * single least-over-m·ks-structs projection: the giant expression
-    * blows the JVM's 64 KB generated-method limit at ks ≥ 64, and every
-    * (re)plan then pays a seconds-long Janino compile-and-fail before
-    * the interpreted fallback (measured: it dominated the PQ bench
-    * rows). The join fans out m·ks rows per vector, but the partial min
-    * combines to m rows per vector before the exchange — and the shape
-    * is the only one that survives ks = 256 at all. The pre-join
-    * repartition is the Exchange barrier that keeps the residual/cell
-    * projection evaluated once, not once per meta row.
+  /** Per-vector key columns of every code table: vec_id, plus the coarse
+    * cell in residual mode.
     */
-  private def pqCodesLong(emb: DataFrame, idCol: String, embCol: String,
-                          model: PqModel,
-                          coarse: Option[IvfModel]): DataFrame = {
-    val extra = if (coarse.isDefined) Seq("cell") else Nil
+  private def pqKeys(coarse: Option[IvfModel]): Seq[Column] =
+    col("vec_id") +: (if (coarse.isDefined) Seq(col("cell")) else Nil)
+
+  /** PQ codes as arrays — (vec_id[, cell], codes), one row per vector,
+    * `codes` the m per-subspace argmin code ids (squared L2, ties to the
+    * lower code id) from the [[graft.functions.pq_codes]] kernel: one
+    * loop per vector over the frozen codebooks, no codeword join and no
+    * aggregate. The kernel only sees `emb_d`, so raw and IVF-residual
+    * modes share it.
+    */
+  private def pqCodeArrays(emb: DataFrame, idCol: String, embCol: String,
+                           model: PqModel,
+                           coarse: Option[IvfModel]): DataFrame = {
     // explicit partition count: AQE sizes the exchange by its INPUT
     // bytes (a few KB of raw vectors) and would coalesce to one
-    // partition — but the compute lives AFTER the fan-out (|corpus| ×
-    // m·ks d2 evaluations, ~4M on the sf0.1 fixture), and a coalesced
-    // plan runs it single-threaded (measured 2 s of the old 4.1 s
-    // q_pq_search, graft.tools.PqProfile). A user-specified count is
-    // exempt from AQE coalescing.
+    // partition, running the |corpus| × m·ks distance loop
+    // single-threaded; a user-specified count is exempt from AQE
+    // coalescing. It also fixes the file count of every publish and
+    // append, and it is the Exchange barrier that keeps the residual/
+    // cell projection out of the kernel's stage.
     val nPart = emb.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
-    val corpus = pqCorpus(emb, idCol, embCol, coarse)
+    pqCorpus(emb, idCol, embCol, coarse)
       .repartition(nPart, col("vec_id"))
-    val sub = slice(col("emb_d"), col("j") * model.subDim + 1,
-      lit(model.subDim))
-    corpus.crossJoin(broadcast(codeMeta(emb.sparkSession, model)))
-      .select((col("vec_id") +: extra.map(col)) ++ Seq(col("j"),
-        struct(d2Col(sub, col("w"), model.subDim).as("d"),
-          col("c")).as("dc")): _*)
-      .groupBy((col("vec_id") +: extra.map(col)) :+ col("j"): _*)
-      .agg(min(col("dc")).as("b"))
-      .select((col("vec_id") +: extra.map(col)) ++
-        Seq(col("j"), col("b.c").as("c")): _*)
+      .select(pqKeys(coarse) :+ graft.functions.pq_codes(col("emb_d"), model)
+        .as("codes"): _*)
   }
 
+  /** Long-form PQ codes — (vec_id[, cell], j, c), one row per (vector,
+    * subspace): [[pqCodeArrays]] posexploded, the layout the standing
+    * code index stores and the ADC join probes. `posexplode_outer` on
+    * purpose: the code array is never null or empty, so the rows are
+    * posexplode's, but an inner generator makes the optimizer infer a
+    * `size(codes) > 0` filter and push it below the repartition — the
+    * kernel would then run twice, once in the un-repartitioned scan.
+    */
+  private[graft] def pqCodesLong(emb: DataFrame, idCol: String,
+                                 embCol: String, model: PqModel,
+                                 coarse: Option[IvfModel]): DataFrame =
+    pqCodeArrays(emb, idCol, embCol, model, coarse)
+      .select(pqKeys(coarse) :+
+        posexplode_outer(col("codes")).as(Seq("j", "c")): _*)
+
   /** Per-subspace code assignment columns c0..c{m-1} (the wide encode
-    * contract): [[pqCodesLong]] pivoted back to one row per vector.
-    * With `coarse` set the codes quantize the IVF-cell residual (see
-    * [[pqCorpus]]) and the output carries the coarse `cell` — the
-    * (cell, codes) pair IS the compressed IVFPQ corpus representation.
+    * contract): one `element_at` per subspace over [[pqCodeArrays]]'
+    * code array. With `coarse` set the codes quantize the IVF-cell
+    * residual (see [[pqCorpus]]) and the output carries the coarse
+    * `cell` — the (cell, codes) pair IS the compressed IVFPQ corpus
+    * representation.
     */
   def pqEncode(emb: DataFrame, idCol: String, embCol: String,
-               model: PqModel, coarse: Option[IvfModel] = None): DataFrame = {
-    val extra = if (coarse.isDefined) Seq("cell") else Nil
-    pqCodesLong(emb, idCol, embCol, model, coarse)
-      .groupBy((col("vec_id") +: extra.map(col)): _*)
-      .agg(
-        max(when(col("j") === 0, col("c"))).as("c0"),
-        (1 until model.m).map(j =>
-          max(when(col("j") === j, col("c"))).as(s"c$j")): _*)
-  }
+               model: PqModel, coarse: Option[IvfModel] = None): DataFrame =
+    pqCodeArrays(emb, idCol, embCol, model, coarse)
+      .select(pqKeys(coarse) ++ (0 until model.m).map(j =>
+        element_at(col("codes"), j + 1).as(s"c$j")): _*)
 
   /** Asymmetric-distance (ADC) top-k over PQ codes: each query computes
     * its m·ks lookup table of subspace distances to every codeword (e12
@@ -831,8 +832,9 @@ object Ann {
 
   /** Publish the STANDING PQ code index — write-once/serve-many on the
     * ANN tier (production IVFPQ separates index BUILD from SEARCH; the
-    * convenience [[pqSearch]] fuses them, re-paying the corpus × m·ks
-    * code assignment on every query batch). The long-format
+    * convenience [[pqSearch]] fuses them, re-paying the per-vector
+    * [[graft.functions.pq_codes]] encode — |corpus| × m·ks distance
+    * evaluations — on every query batch). The long-format
     * (vec_id[, cell], j, c) code table lands under `dir`; plain
     * non-bucketed parquet ON PURPOSE — the ADC join probes the codes
     * with a BROADCAST lookup table, so the corpus side never shuffles
@@ -886,7 +888,7 @@ object Ann {
     * ([[EditDistanceJoin.appendVariantIndexBucketed]]) tiers already
     * carry: encode ONLY the day's batch and append its codes to the
     * standing [[writePqIndex]] dir, instead of re-encoding the grown
-    * corpus (the corpus × m·ks assignment the tier exists to amortize).
+    * corpus (the |corpus| × m·ks encode the tier exists to amortize).
     * Losslessness is structural: codes are per-vector rows computed by
     * the same expressions the full writer uses, so
     * append(corpus) ∪ append(batch) = write(corpus ∪ batch) row-for-row
@@ -1182,11 +1184,10 @@ object Ann {
     val scored = coarse match {
       case None =>
         val codeLong = codes
-        // LUT via the same (j, c, w) meta join as the code assignment
-        // (pqCodesLong reasoning — one small codegen'd d2 per LUT row);
-        // the repartition is the Exchange barrier keeping the query
-        // projection out of the fan-out.
-        // explicit count: exempt from AQE coalescing (pqCodesLong note) —
+        // LUT via the (j, c, w) meta join — one small codegen'd d2 per
+        // LUT row; the repartition is the Exchange barrier keeping the
+        // query projection out of the fan-out.
+        // explicit count: exempt from AQE coalescing (pqCodeArrays note) —
         // the LUT fan-out compute sits after this exchange
         val nPart = emb.sparkSession.conf
           .get("spark.sql.shuffle.partitions").toInt
@@ -1236,7 +1237,7 @@ object Ann {
         // collapses into the LUT projection and re-evaluates once per
         // codeword meta row. probed is |queries|·nProbe rows; the
         // shuffle is noise.
-        // explicit count: exempt from AQE coalescing (pqCodesLong note) —
+        // explicit count: exempt from AQE coalescing (pqCodeArrays note) —
         // the per-cell LUT fan-out compute sits after this exchange
         val nPart = emb.sparkSession.conf
           .get("spark.sql.shuffle.partitions").toInt

@@ -20,6 +20,20 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
+  /** The star steps' long-ids contract, checked at entry: their output
+    * structs are typed struct<s:bigint,d:bigint>, so other id types would
+    * surface as an opaque concat type mismatch instead.
+    */
+  private def requireLongIds(e: DataFrame, step: String): Unit = {
+    val types = Seq("src", "dst").map(c =>
+      c -> e.schema.find(_.name == c).map(_.dataType.catalogString))
+    require(types.forall(_._2.contains("bigint")),
+      s"ConnectedComponents.$step: vertex ids must be bigint (the " +
+        "long-ids contract; cast src/dst to long before the star steps), got " +
+        types.map { case (c, t) => s"$c: ${t.getOrElse("missing")}" }
+          .mkString(", "))
+  }
+
   /** Both star steps hold a LOOP INVARIANT (round 18): every edge frame
     * entering a star step is NORMALIZED (src > dst on every row), and
     * both steps' OUTPUT rows are again normalized (each emitted row is
@@ -58,6 +72,7 @@ object ConnectedComponents {
     * rows pin it.
     */
   private[graft] def largeStar(e: DataFrame): DataFrame = {
+    requireLongIds(e, "largeStar")
     // invariant: e rows satisfy src > dst, so the two union halves are
     // disjoint orientations — no distinct exchange needed to symmetrize
     val sym = e.select(col("src"), col("dst"))
@@ -90,6 +105,7 @@ object ConnectedComponents {
   }
 
   private[graft] def smallStar(e: DataFrame): DataFrame = {
+    requireLongIds(e, "smallStar")
     // invariant: input rows already satisfy src > dst (largeStar output or
     // the normalized initial frame) — no re-orientation; min(dst) < src
     // outright, so no least() with src is needed. Same one-window-exchange

@@ -161,7 +161,7 @@ object EditDistanceJoin {
     // plan runs the whole neighborhood expansion single-threaded
     // (measured: a 1.7-2.4 s one-task stage inside q_link_agg_lev,
     // graft.tools.LinkAggAudit — the same AQE blind spot as the PQ
-    // codeword fan-out in Ann.pqCodesLong). A user-specified count is
+    // encode in Ann.pqCodeArrays). A user-specified count is
     // exempt from AQE coalescing. The repartition column must NOT be
     // `key`: the groupBy child is already hash-partitioned on key, so a
     // same-column repartition is elided as redundant and the coalescible

@@ -21,25 +21,48 @@ package graft.operators
   *
   * Determinism: each section is an independent, self-contained Spark
   * pipeline; concurrent submission changes scheduling order only, never
-  * any section's result. The first section failure is rethrown after
-  * all threads finish (no half-running leftovers).
+  * any section's result.
+  *
+  * Failure: every section's jobs carry a per-section job TAG (not a job
+  * group — the group is the caller's, and the bench tracer attributes
+  * stages by it). Once any section has failed, the siblings still running
+  * have their jobs cancelled by tag, re-issued while they stay alive, so
+  * a section that submits a further job is stopped at that one too. The
+  * call returns once every thread has ended, rethrowing the first failure
+  * with every other one attached via `addSuppressed`.
   */
 private[graft] object Par {
   def sections[A](thunks: (() => A)*): Seq[A] = {
     require(thunks.nonEmpty, "need at least one section")
     if (thunks.size == 1) return Seq(thunks.head())
+    val sc = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val call = java.util.UUID.randomUUID()
+    val tags = thunks.indices.map(i => s"graft-par-$call-$i")
     val results = new Array[Any](thunks.size)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val threads = thunks.zipWithIndex.map { case (thunk, i) =>
       val t = new Thread(() => {
-        try results(i) = thunk()
-        catch { case e: Throwable => errs.add(e) }
+        try {
+          sc.foreach(_.addJobTag(tags(i)))
+          results(i) = thunk()
+        } catch { case e: Throwable => errs.add(e) }
       }, s"graft-par-$i")
       t.start()
       t
     }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    while (threads.exists(_.isAlive)) {
+      threads.find(_.isAlive).foreach(_.join(20))
+      if (!errs.isEmpty) for (i <- threads.indices if threads(i).isAlive)
+        sc.foreach(_.cancelJobsWithTag(tags(i),
+          "a sibling graft.operators.Par section failed"))
+    }
+    if (!errs.isEmpty) {
+      val first = errs.peek()
+      errs.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
     results.toSeq.map(_.asInstanceOf[A])
   }
 }

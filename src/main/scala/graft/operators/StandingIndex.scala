@@ -48,8 +48,10 @@ private[graft] object StandingIndex {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
-    if (fs.exists(root) && !fs.delete(root, true))
-      throw new java.io.IOException(s"publishMetaRow: delete of $path failed")
+    // written under a dot-prefixed sibling (hidden from every reader) and
+    // renamed into place, so a reader never sees a half-written file
+    val tmp = new org.apache.hadoop.fs.Path(root.getParent,
+      s".${root.getName}.tmp-${java.util.UUID.randomUUID()}")
     val fields = cols.map { case (name, v) =>
       val tn = v match {
         case MetaInt(_)                      => INT32
@@ -60,21 +62,27 @@ private[graft] object StandingIndex {
     }
     val schema = new org.apache.parquet.schema.MessageType("meta",
       fields: _*)
-    val file = new org.apache.hadoop.fs.Path(root, "part-00000.parquet")
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(file, conf))
-      .withType(schema).build()
+    val file = new org.apache.hadoop.fs.Path(tmp, "part-00000.parquet")
     try {
-      val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
-      cols.foreach {
-        case (n, MetaInt(v))    => g.add(n, v)
-        case (n, MetaLong(v))   => g.add(n, v)
-        case (n, MetaDouble(v)) => g.add(n, v)
-        case (_, MetaNullDouble) => // absent = NULL under OPTIONAL
-      }
-      writer.write(g)
-    } finally writer.close()
+      val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
+          .fromPath(file, conf))
+        .withType(schema).build()
+      try {
+        val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
+        cols.foreach {
+          case (n, MetaInt(v))    => g.add(n, v)
+          case (n, MetaLong(v))   => g.add(n, v)
+          case (n, MetaDouble(v)) => g.add(n, v)
+          case (_, MetaNullDouble) => // absent = NULL under OPTIONAL
+        }
+        writer.write(g)
+      } finally writer.close()
+    } catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    if (fs.exists(root) && !fs.delete(root, true))
+      throw new java.io.IOException(s"publishMetaRow: delete of $path failed")
+    if (!fs.rename(tmp, root))
+      throw new java.io.IOException(s"publishMetaRow: rename $tmp -> $path failed")
   }
 
   /** Tolerant reader over a published meta row: fields added to a
@@ -85,21 +93,46 @@ private[graft] object StandingIndex {
     * fetch must not cost a Spark job; reads Spark-written sidecars
     * unchanged (standard parquet primitives).
     */
-  final class MetaRow(vals: Map[String, Any]) {
+  final class MetaRow(path: String, vals: Map[String, Any]) {
     def opt[T](name: String)(implicit ct: scala.reflect.ClassTag[T])
         : Option[T] =
-      vals.get(name).map(_.asInstanceOf[T])
+      vals.get(name).map(typed[T](name, _))
     def get[T](name: String)(implicit ct: scala.reflect.ClassTag[T]): T =
-      vals.getOrElse(name, throw new NoSuchElementException(
-        s"meta row has no field '$name'")).asInstanceOf[T]
+      typed[T](name, vals.getOrElse(name, throw new NoSuchElementException(
+        s"meta sidecar at $path has no field '$name'")))
+
+    /** The boxed value checked against the requested type here, where the
+      * field and path are known, not as a ClassCastException at the use.
+      */
+    private def typed[T](name: String, v: Any)(
+        implicit ct: scala.reflect.ClassTag[T]): T = {
+      val want = ct.runtimeClass match {
+        case java.lang.Integer.TYPE => classOf[java.lang.Integer]
+        case java.lang.Long.TYPE    => classOf[java.lang.Long]
+        case java.lang.Double.TYPE  => classOf[java.lang.Double]
+        case java.lang.Float.TYPE   => classOf[java.lang.Float]
+        case java.lang.Boolean.TYPE => classOf[java.lang.Boolean]
+        case c                      => c
+      }
+      if (!want.isInstance(v))
+        throw new IllegalArgumentException(
+          s"meta sidecar at $path: field '$name' is " +
+            s"${v.getClass.getSimpleName}, expected ${want.getSimpleName}")
+      v.asInstanceOf[T]
+    }
   }
 
   def readMetaRow(spark: SparkSession, path: String): MetaRow = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val conf = spark.sparkContext.hadoopConfiguration
-    val dataFile = listDataFiles(spark, path).headOption.getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"no parquet data file under meta sidecar dir $path"))
+    val dataFile = listDataFiles(spark, path) match {
+      case Seq(f) => f
+      case Seq() => throw new java.io.FileNotFoundException(
+        s"no parquet data file under meta sidecar dir $path")
+      case fs => throw new IllegalStateException(
+        s"meta sidecar dir $path holds ${fs.size} data files, expected " +
+          s"exactly one: ${fs.map(_.getName).sorted.mkString(", ")}")
+    }
     val reader = org.apache.parquet.hadoop.ParquetReader
       .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
         dataFile)
@@ -121,7 +154,7 @@ private[graft] object StandingIndex {
             s"meta sidecar field ${f.getName} has unsupported type $other")
         }))
       }.toMap
-      new MetaRow(vals)
+      new MetaRow(path, vals)
     } finally reader.close()
   }
 

@@ -344,6 +344,18 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
+  test("star steps reject non-bigint ids with the long-ids contract") {
+    val ints = Seq((7, 3), (9, 2)).toDF("src", "dst")
+    Seq[(String, org.apache.spark.sql.DataFrame => Any)](
+      "largeStar" -> (ConnectedComponents.largeStar(_)),
+      "smallStar" -> (ConnectedComponents.smallStar(_))).foreach {
+      case (step, f) =>
+        val e = intercept[IllegalArgumentException](f(ints))
+        assert(Seq(s"ConnectedComponents.$step", "long-ids contract",
+          "src: int", "dst: int").forall(e.getMessage.contains), e.getMessage)
+    }
+  }
+
   test("sizeHistogram counts clusters per size") {
     // components: {1,2,3}, {4,5}, {6}, {7} -> sizes 3:1, 2:1, 1:2
     val comp = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L),

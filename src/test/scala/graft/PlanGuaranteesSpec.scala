@@ -32,15 +32,14 @@ class PlanGuaranteesSpec extends SparkSpec {
     * crossJoin(broadcast(<pass-label table>)) — the constant-attach shape
     * again (build side = one row per named pass + 'union'), plus its
     * truth side is the same sample-tier exact pair set as
-    * q_link_snm_recall. q_pq_encode / q_pq_search / q_pq_probe /
-    * q_pq_recall: code assignment and the ADC LUT build crossJoin the
-    * (j, c, w) codeword meta table (m·ks driver rows, broadcast) onto
-    * the corpus / probed-query residuals — the build side is the
-    * CONSTANT-SIZED codebook, the per-vector fan-out is the fixed m·ks
-    * (combined back to m rows before any exchange), the IVFPQ
-    * lookup-table shape, not a candidate blowup (Ann.pqCodesLong
-    * Scaladoc: the single-projection alternative blows the 64 KB
-    * codegen method limit at ks >= 64).
+    * q_link_snm_recall. q_pq_search / q_pq_probe / q_pq_recall: only
+    * the ADC LUT build crossJoins the (j, c, w) codeword meta table
+    * (m·ks rows, broadcast) onto the bounded query batch's
+    * (probed-cell residual) vectors — the build side is the
+    * CONSTANT-SIZED codebook, the per-query fan-out the fixed m·ks, the
+    * IVFPQ lookup-table shape, not a candidate blowup. The corpus side
+    * never cross-joins: its codes come from the per-vector pq_codes
+    * kernel (Ann.pqCodesLong), so q_pq_encode plans no BNLJ.
     */
   private val allowedBnlj =
     // q_link_ro_auto: the BNLJ here is the cost-based CHOICE, not a
@@ -53,7 +52,7 @@ class PlanGuaranteesSpec extends SparkSpec {
       "q_rag_topk", "q_tfidf_top", "q_ann_recall",
       "q_lm_score", "q_lm_contrast", "q_bm25", "q_bm25_batch",
       "q_dsir_weights", "q_pq_recall", "q_link_snm_multi_recall",
-      "q_pq_search", "q_pq_probe", "q_pq_encode", "q_pq_search_indexed",
+      "q_pq_search", "q_pq_probe", "q_pq_search_indexed",
       // same LUT shape over the APPENDED code table — identical plan
       // family to q_pq_search_indexed, only the scan's file list differs
       "q_pq_search_appended",
